@@ -17,6 +17,15 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+echo "== one-session gate =="
+# Every entry point builds its session through graft.GraftSession.local; a
+# second SparkSession.builder in src/main would let the confs drift again.
+if grep -rn "SparkSession.builder" src/main --include='*.scala' \
+    | grep -v '^src/main/scala/graft/GraftSession.scala:'; then
+  echo "CI SESSION GATE FAILED: build sessions with graft.GraftSession.local" >&2
+  exit 1
+fi
+
 if [[ "${1:-}" == "--bench" ]]; then
   echo "== sbt compile =="
   sbt -batch compile

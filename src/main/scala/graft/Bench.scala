@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark entry: times every SparkEntry query at SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (driver contract). A small warmup pass first
   * amortizes classloading/JIT/codegen so the per-query numbers measure the
@@ -38,9 +36,10 @@ import org.apache.spark.sql.SparkSession
   * not a property of any query. The committed floors are 16g numbers.
   *   3. The tail stays parseable: the known-benign WindowExec warning flood
   *      (two allowlisted O(calendar) unpartitioned windows, see
-  *      PlanAuditSpec) is silenced to ERROR, and the short pointer line is
-  *      printed BEFORE and AFTER spark.stop() so a capture window clipped by
-  *      shutdown logging still contains one complete copy.
+  *      PlanAuditSpec) is silenced to ERROR by [[GraftSession]], and the
+  *      short pointer line is printed BEFORE and AFTER spark.stop() so a
+  *      capture window clipped by shutdown logging still contains one
+  *      complete copy.
   */
 object Bench {
 
@@ -60,25 +59,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // plan strings of lineage-kept iterative loops are exponential to
-      // DESCRIBE (generateTreeString expands a DAG as a tree) — cap so the
-      // driver never OOMs stringifying a plan (r16 sweep, SCALE.md)
-      .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The only WARN-level flood in a clean run is WindowExec's "No Partition
-    // Defined" for the two allowlisted calendar-sized windows; it buried the
-    // round-6 pointer line mid-token in the driver's capture window.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = GraftSession.local()
 
     def materialize(name: String): Unit =
       SparkEntry.queries(name)(spark, sfDir)

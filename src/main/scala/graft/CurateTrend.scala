@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Composition-level scale check for the [[Curate]] pipeline (dev tooling,
   * sibling of [[BenchTrend]]): every Curate stage is individually trended
   * by its query-level twin, but the COMPOSITION feeds each stage the
@@ -18,7 +16,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_TREND_COPIES
   * (default 10), SPARK_GRAFT_TREND_DIR, SPARK_GRAFT_TREND_OUT (default
-  * curate_trend.json).
+  * plans/curate_trend.json).
   */
 object CurateTrend {
   def main(args: Array[String]): Unit = {
@@ -30,19 +28,7 @@ object CurateTrend {
     // silently shrinks back to base size past stage 2)
     val synthDir = sys.env.getOrElse("SPARK_GRAFT_TREND_DIR",
       s"/tmp/graft_trend/${new java.io.File(baseDir).getName}x${copies}sw")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // plan strings of lineage-kept iterative loops are exponential to
-      // DESCRIBE (generateTreeString expands a DAG as a tree) — cap so the
-      // driver never OOMs stringifying a plan (r16 sweep, SCALE.md)
-      .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
 
     System.err.println(s"[curate-trend] synthesizing $synthDir = $baseDir x$copies (stopword-preserving)")
     sources.ScaleSynth.synthesize(spark, baseDir, synthDir, copies, keepStopwords = true)
@@ -92,7 +78,7 @@ object CurateTrend {
         s""""wall_per_sf_ratio":${f3(ws / (copies * wb))},""" +
         s""""funnel_base":${funnelJson(fb)},"funnel_scaled":${funnelJson(fs)},""" +
         s""""stages":$stageJson}"""
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_TREND_OUT", "curate_trend.json")
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_TREND_OUT", "plans/curate_trend.json")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), json + "\n")
     spark.stop()
     println(json)

@@ -1,23 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // plan strings of lineage-kept iterative loops are exponential to
-      // DESCRIBE (generateTreeString expands a DAG as a tree) — cap so the
-      // driver never OOMs stringifying a plan (r16 sweep, SCALE.md)
-      .config("spark.sql.maxPlanStringLength", (1 << 20).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // dev-only subset filter (unset for the driver's full run). Empty /
     // whitespace-only values are treated as unset — Set("") would silently
@@ -30,13 +18,24 @@ object Verify {
       System.err.println(
         s"[verify] SPARK_GRAFT_ONLY active: running $run/${SparkEntry.queries.size} queries")
     }
+    // one stderr status line per query: name, ok/FAILED, wall seconds; a
+    // failure adds the exception class and its root cause
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      val t0 = System.nanoTime()
+      val failure =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable => Some(e) }
+      val sec = "%.2f".formatLocal(java.util.Locale.ROOT, (System.nanoTime() - t0) / 1e9)
+      failure match {
+        case None => System.err.println(s"[verify] $name ok ${sec}s")
+        case Some(e) =>
+          val root = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq.last
+          System.err.println(s"[verify] $name FAILED ${sec}s ${e.getClass.getName}: " +
+            s"${e.getMessage} | root cause ${root.getClass.getName}: ${root.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

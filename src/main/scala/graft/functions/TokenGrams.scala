@@ -78,7 +78,13 @@ object TokenGram {
     (v << 4) | ((d(7) >> 4) & 0xfL)
   }
 
-  /** All word n-grams as zero-copy UTF8String slices. */
+  /** All word n-grams as zero-copy UTF8String slices.
+    *
+    * Retention caveat: every slice shares ONE byte array, the whole
+    * document's, so a retained gram pins the full document. Callers here
+    * explode the array at once, which copies each gram into its own row.
+    * Do not cache, `collect_list` or driver-collect the raw array; copy
+    * the grams first (e.g. `UTF8String.clone`). */
   def grams(s: UTF8String, n: Int): Array[UTF8String] = {
     val bytes = s.getBytes
     val starts = tokenStarts(bytes)
@@ -317,7 +323,8 @@ abstract class TokenGramExpression extends UnaryExpression {
 }
 
 /** All word n-grams of a single-space-joined text, as zero-copy slices —
-  * drop-in for `shinglesFromTokens(split(text,' '), n)`. */
+  * drop-in for `shinglesFromTokens(split(text,' '), n)`. The slices share
+  * the document's bytes: see the retention caveat on [[TokenGram.grams]]. */
 case class TokenGramStrings(child: Expression, n: Int)
   extends TokenGramExpression {
   require(n >= 1, s"n $n must be positive")

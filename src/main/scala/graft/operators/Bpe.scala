@@ -201,7 +201,7 @@ object Bpe {
     * and a `batched = false` mode forcing one merge per refresh — the
     * sequential-greedy reference the batched mode must match bit for bit
     * (BpeSpec) and the A/B baseline for the ≥512-merge amortization
-    * demo ([[graft.BpeSweep]]). */
+    * demo (BpeSweep, since deleted; its result is in SCALE.md). */
   private[graft] def trainMergesStats(docs: DataFrame, iters: Int,
       batched: Boolean = true): (DataFrame, Int) = {
     require(iters >= 1, "iters must be >= 1")

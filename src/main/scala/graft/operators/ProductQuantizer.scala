@@ -290,8 +290,8 @@ object ProductQuantizer {
     // stage 2 broadcasts the nQueries×shortlist candidate list to every
     // executor — the same every-executor-OOM hazard the other ANN entry
     // points guard with MaxBroadcastQueries, except here the broadcast is
-    // the PRODUCT of the two knobs (RerankSweep legitimately passes
-    // shortlist up to 10^6 with a single query)
+    // the PRODUCT of the two knobs (a shortlist sweep legitimately
+    // passes shortlist up to 10^6 with a single query)
     require(nQueries.toLong * shortlist <= Similarity.MaxBroadcastQueries.toLong * 16,
       s"rerank shortlist of ${nQueries.toLong * shortlist} rows " +
         s"(nQueries=$nQueries × shortlist=$shortlist) exceeds " +

@@ -314,20 +314,11 @@ object TextAnalysis {
     * positions mirror exactly across engines). `keep` applies the paper's
     * per-n thresholds, each relaxable.
     *
-    * Shape at scale (fused r18, native generators r19): the nine per-n
-    * passes collapse into TWO generator scans over one materialized base.
-    * The top side emits every (n, gram-hash) for n ∈ {2,3,4} in one pass
-    * into a single (doc, n, gram) count → per-(doc, n) max. The dup side
-    * emits every (n, start, gram-hash) for n ∈ {5..10} in one pass; the
-    * (doc, n, gram) count aggregate ALSO collects the start positions,
-    * and the covered-position count is an interval-union fold over the
-    * sorted starts of the c>1 rows (equal by construction to the former
-    * explode-positions → distinct → count, without shuffling Σc·n
-    * position rows). Both generators are the native [[
-    * graft.functions.TokenGramXx64s]] expression — one linear byte scan
-    * per document emitting (n, i, xxhash64) rows, replacing the r18
-    * interpreted transform-lambda chain that built and hashed every gram
-    * string (guide §1.2 step 2: per-task work).
+    * Shape at scale (r19): ONE scan, zero exchanges — the native
+    * [[graft.functions.TokenGramRepStats]] expression computes all nine
+    * statistics in one linear byte pass per document (the top count per
+    * n ∈ {2,3,4}; an interval union of repeated grams' spans for
+    * n ∈ {5..10}), so the plan is scan → project.
     *
     * APPROXIMATION NOTE (hashed gram keys, r18): grams are xxhash64-keyed
     * through the count aggregates — the gram text is only an intra-

@@ -71,14 +71,4 @@ object Feeder {
     // drop it so a replay workDir holds only the feed itself
     fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
   }
-
-  /** Write messages as JSON-lines text for file-based stream sources. */
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    tickMessages(spark, sfDir).select(col("value")).write.mode("overwrite").text(outDir)
-    spark.stop()
-  }
 }

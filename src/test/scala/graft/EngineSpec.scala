@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.plans.GraftExtensions
@@ -9,11 +10,7 @@ import graft.sinks.TableSetup
 /** Engine-packaging checks: SQL function registration + the partitioned
   * table DDL analog (setup.py:43-119). */
 class EngineSpec extends AnyFunSuite {
-  lazy val spark = {
-    val s = SparkTestSession.spark
-    GraftExtensions.register(s)
-    s
-  }
+  lazy val spark = SparkTestSession.spark
 
   test("seeded_ema / wilder_rma are usable from plain SQL as window functions") {
     import spark.implicits._
@@ -127,6 +124,56 @@ class EngineSpec extends AnyFunSuite {
     val bf = spark.sql("SELECT bloom_set_agg(h, 256, 3) AS bf FROM sqlkeys")
       .head().getSeq[Long](0)
     assert(bf.size == 4 && bf.exists(_ != 0L))
+  }
+
+  test("GraftSession: engine confs and SQL functions; a second call reuses the session") {
+    val s = GraftSession.local(4)
+    assert(s eq spark)
+    assert(s.sparkContext.master == "local[4]")
+    assert(s.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(s.conf.get(SQLConf.MAX_PLAN_STRING_LENGTH.key) == (1 << 20).toString)
+    assert(s.sparkContext.getConf.get("spark.ui.enabled") == "false")
+    assert(s.conf.get("spark.sql.warehouse.dir").contains("graft_wh"))
+    val (rocksKey, rocksProvider) = graft.streaming.StreamIngest.rocksdbConf
+    assert(s.conf.get(rocksKey) == rocksProvider)
+    val rows = s.sql(
+      """SELECT seeded_ema(x, 2) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING)
+        |FROM VALUES (1.0D), (3.0D) AS t(x)""".stripMargin).collect()
+    assert(rows(1).getDouble(0) == 2.0)
+    // the register step works on a session that already exists, and
+    // registers only what is missing
+    val registry = s.sessionState.functionRegistry
+    val ema = org.apache.spark.sql.catalyst.FunctionIdentifier("seeded_ema")
+    registry.dropFunction(ema)
+    assert(GraftSession.local(4) eq s)
+    assert(registry.functionExists(ema))
+    assert(GraftExtensions.register(s) == 0)
+  }
+
+  test("bad SQL function arguments fail at analysis, not at construction") {
+    import spark.implicits._
+    Seq(("a b c", 2, 1.0)).toDF("s", "n", "x").createOrReplaceTempView("sqlargs")
+    def condition(sql: String): String =
+      intercept[org.apache.spark.sql.AnalysisException](spark.sql(sql).collect()).getCondition
+    val w = "OVER (ORDER BY x ROWS UNBOUNDED PRECEDING)"
+    // a length below 1, for a scalar and an aggregate function
+    assert(condition("SELECT token_grams(s, 0) FROM sqlargs") ==
+      "DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE")
+    assert(condition(s"SELECT seeded_ema(x, 0) $w FROM sqlargs") ==
+      "DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE")
+    assert(condition("SELECT bloom_set_agg(n, 256, -1) FROM sqlargs") ==
+      "DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE")
+    // an INT or DOUBLE parameter that is not a literal of its type
+    assert(condition("SELECT window_hashes(s, n) FROM sqlargs") ==
+      "INVALID_PARAMETER_VALUE.INTEGER")
+    assert(condition("SELECT token_grams(s, 2.5) FROM sqlargs") ==
+      "INVALID_PARAMETER_VALUE.INTEGER")
+    assert(condition(s"SELECT holt_smooth(x, x, 0.1, 0) $w FROM sqlargs") ==
+      "INVALID_PARAMETER_VALUE.DOUBLE")
+    // the wrong number of arguments
+    assert(condition("SELECT token_grams(s) FROM sqlargs") ==
+      "WRONG_NUM_ARGS.WITHOUT_SUGGESTION")
   }
 
   test("TableSetup: day-partitioned write, first-write-wins across appends, pruned range read") {

@@ -52,7 +52,6 @@ class FuzzyJoinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   }
 
   test("registered SQL function works in spark.sql") {
-    graft.plans.GraftExtensions.register(spark)
     val r = spark.sql("SELECT jaro_winkler('martha', 'marhta') AS jw").collect()
     assert(r.head.getDouble(0) == 0.9611111111111111)
   }

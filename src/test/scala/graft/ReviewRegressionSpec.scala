@@ -35,8 +35,6 @@ class ReviewRegressionSpec extends AnyFunSuite {
   }
 
   test("seeded_ema / float_dot reject wrong input types at analysis time") {
-    import graft.plans.GraftExtensions
-    GraftExtensions.register(spark)
     (1 to 5).map(i => ("S", i, i.toFloat)).toDF("symbol", "t", "fclose")
       .createOrReplaceTempView("typed_bars")
     val e1 = intercept[AnalysisException] {
